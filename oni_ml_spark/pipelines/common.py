@@ -7,8 +7,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from oni_ml_spark.scoring import most_suspicious, score_records
-from oni_ml_spark.topics import TopicModel, corpus_counts, fit_topic_model
+from oni_ml_spark.scoring import min_endpoint_score, most_suspicious, score_records
+from oni_ml_spark.topics import TopicModel, fit_topic_model
+from oni_ml_spark.transforms.feedback import conform_feedback, oversample, severity_filter
 
 FEEDBACK_FLAG = "__is_feedback"
 
@@ -20,10 +21,26 @@ class SuspiciousConnectsResult:
     model: TopicModel
 
 
+def with_feedback(
+    df: DataFrame, feedback: DataFrame | None, sev_col: str, dup_factor: int
+) -> DataFrame:
+    """Flag the day's records and append the analyst's confirmed-benign
+    (severity 3) rows, each ``dup_factor`` times, conformed to the day's
+    schema (netflow/FlowPreLDA.scala:73-99, dns/DNSPreLDA.scala:69-85,
+    proxy/ProxyFeedback.scala:53-67). Feedback rows train the model and are
+    never scored."""
+    df = df.withColumn(FEEDBACK_FLAG, F.lit(False))
+    if feedback is None:
+        return df
+    fb = oversample(severity_filter(feedback, sev_col), dup_factor).withColumn(
+        FEEDBACK_FLAG, F.lit(True)
+    )
+    return df.unionByName(conform_feedback(fb, df))
+
+
 def train_and_score(
     featurized: DataFrame,
-    doc_col: str,
-    word_col: str,
+    endpoints: list[tuple[str, str, str]],
     *,
     topic_count: int = 20,
     doc_concentration: float = 2.5,
@@ -32,23 +49,34 @@ def train_and_score(
     threshold: float = 1.0,
     top_k: int = -1,
     drop_unseen_docs: bool = False,
-    extra_corpus: DataFrame | None = None,
     max_count_per_word: int | None = 10_000,
 ) -> SuspiciousConnectsResult:
     """Train LDA on the full featurized corpus (feedback rows included when
     flagged via FEEDBACK_FLAG), score only the real records, rank.
 
-    ``extra_corpus`` lets the flow pipeline pass the (dst-ip, dst-word) side
-    so each IP's document sees the events from both endpoints
-    (netflow/FlowPreLDA.scala:131-139).
+    ``endpoints`` lists ``(doc, word, score)`` column triples: each record is
+    one word in each endpoint's document. Flow has two, so each IP's
+    document collects words from both sides of its flows
+    (netflow/FlowPreLDA.scala:131-139) and the record's score is the lower
+    endpoint score (netflow/FlowPostLDA.scala:115-126); dns, proxy and
+    events have one. The corpus is one explode + one groupBy: a single
+    shuffle over |endpoints|·N rows, instead of the reference's
+    reduceByKey per side + union.
     """
     has_flag = FEEDBACK_FLAG in featurized.columns
-    corpus_src = featurized
-    counts = corpus_counts(corpus_src, doc_col, word_col)
-    if extra_corpus is not None:
-        counts = counts.unionByName(extra_corpus).groupBy("doc", "word").agg(
-            F.sum("count").alias("count")
+    counts = (
+        featurized.select(
+            F.explode(
+                F.array(*[
+                    F.struct(F.col(doc).alias("doc"), F.col(word).alias("word"))
+                    for doc, word, _ in endpoints
+                ])
+            ).alias("dw")
         )
+        .select("dw.doc", "dw.word")
+        .groupBy("doc", "word")
+        .agg(F.count(F.lit(1)).alias("count"))
+    )
     model = fit_topic_model(
         counts,
         topic_count=topic_count,
@@ -58,13 +86,18 @@ def train_and_score(
         max_count_per_word=max_count_per_word,
     )
 
-    to_score = (
+    scored = (
         featurized.filter(~F.col(FEEDBACK_FLAG)).drop(FEEDBACK_FLAG)
         if has_flag
         else featurized
     )
-    scored = score_records(
-        to_score, model, doc_col, word_col, drop_unseen_docs=drop_unseen_docs
-    )
+    for doc, word, score in endpoints:
+        scored = score_records(
+            scored, model, doc, word, score_col=score, drop_unseen_docs=drop_unseen_docs
+        )
+    if len(endpoints) > 1:
+        scored = scored.withColumn(
+            "score", min_endpoint_score(*[score for _, _, score in endpoints])
+        )
     suspicious = most_suspicious(scored, threshold=threshold, top_k=top_k)
     return SuspiciousConnectsResult(scored, suspicious, model)

@@ -11,18 +11,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from oni_ml_spark.pipelines.common import FEEDBACK_FLAG, SuspiciousConnectsResult, train_and_score
+from oni_ml_spark.pipelines.common import (
+    SuspiciousConnectsResult,
+    train_and_score,
+    with_feedback,
+)
 from oni_ml_spark.transforms import (
     DECILES,
     QUINTILES,
+    approx_quantile_cuts_multi,
     bin_expr,
     dns_word,
     extract_subdomain_cols,
-    oversample,
+    quantile_cuts_multi,
     string_entropy,
     top_domain_expr,
 )
-from oni_ml_spark.transforms.feedback import conform_feedback, severity_filter
 
 
 def null_filter(df: DataFrame) -> DataFrame:
@@ -40,55 +44,30 @@ def featurize(
     preserved (P5). With exact_quantiles=False all five use the single-pass
     approxQuantile sketch.
     """
-    from oni_ml_spark.transforms.quantiles import (
-        approx_quantile_cuts_multi,
-        quantile_cuts_multi,
-    )
-
     df = df.withColumns(extract_subdomain_cols("dns_qry_name"))
     df = df.withColumn("subdomain_entropy", string_entropy("subdomain"))
     df = df.cache()
 
-    if exact_quantiles:
-        # the reference's five full-scan quantile jobs in 3 jobs total,
-        # >0 predicates (P5) applied per column inside the melt
-        cuts = quantile_cuts_multi(
-            df,
-            {
-                "unix_tstamp": DECILES,
-                "frame_len": DECILES,
-                "subdomain_length": QUINTILES,
-                "subdomain_entropy": QUINTILES,
-                "num_periods": QUINTILES,
-            },
-            positive_only={"subdomain_length", "subdomain_entropy", "num_periods"},
-        )
-        time_cuts, frame_len_cuts = cuts["unix_tstamp"], cuts["frame_len"]
-        subdomain_len_cuts = cuts["subdomain_length"]
-        entropy_cuts, periods_cuts = cuts["subdomain_entropy"], cuts["num_periods"]
-    else:
-        # all five sketches in ONE action; quintile columns take every 2nd
-        # decile, and the >0 predicate (P5) is a null-mask inside the pass
-        cuts = approx_quantile_cuts_multi(
-            df,
-            ["unix_tstamp", "frame_len", "subdomain_length",
-             "subdomain_entropy", "num_periods"],
-            DECILES,
-            positive_only={"subdomain_length", "subdomain_entropy", "num_periods"},
-        )
-        time_cuts, frame_len_cuts = cuts["unix_tstamp"], cuts["frame_len"]
-        subdomain_len_cuts = cuts["subdomain_length"][1::2]
-        entropy_cuts = cuts["subdomain_entropy"][1::2]
-        periods_cuts = cuts["num_periods"][1::2]
+    cuts = (quantile_cuts_multi if exact_quantiles else approx_quantile_cuts_multi)(
+        df,
+        {
+            "unix_tstamp": DECILES,
+            "frame_len": DECILES,
+            "subdomain_length": QUINTILES,
+            "subdomain_entropy": QUINTILES,
+            "num_periods": QUINTILES,
+        },
+        positive_only={"subdomain_length", "subdomain_entropy", "num_periods"},
+    )
 
     df = df.withColumns(
         {
             "top_domain": top_domain_expr("domain", top_domains).cast("string"),
-            "frame_len_bin": bin_expr("frame_len", frame_len_cuts),
-            "time_bin": bin_expr("unix_tstamp", time_cuts),
-            "subdomain_len_bin": bin_expr("subdomain_length", subdomain_len_cuts),
-            "entropy_bin": bin_expr("subdomain_entropy", entropy_cuts),
-            "periods_bin": bin_expr("num_periods", periods_cuts),
+            "frame_len_bin": bin_expr("frame_len", cuts["frame_len"]),
+            "time_bin": bin_expr("unix_tstamp", cuts["unix_tstamp"]),
+            "subdomain_len_bin": bin_expr("subdomain_length", cuts["subdomain_length"]),
+            "entropy_bin": bin_expr("subdomain_entropy", cuts["subdomain_entropy"]),
+            "periods_bin": bin_expr("num_periods", cuts["num_periods"]),
         }
     )
     return df.withColumn(
@@ -115,18 +94,11 @@ def run(
     exact_quantiles: bool = True,
     max_count_per_word: int | None = 10_000,
 ) -> SuspiciousConnectsResult:
-    df = null_filter(df).withColumn(FEEDBACK_FLAG, F.lit(False))
-    if feedback is not None:
-        fb = oversample(severity_filter(feedback, "dns_sev"), dup_factor).withColumn(
-            FEEDBACK_FLAG, F.lit(True)
-        )
-        df = df.unionByName(conform_feedback(fb, df))
-
+    df = with_feedback(null_filter(df), feedback, "dns_sev", dup_factor)
     featurized = featurize(df, top_domains or [], exact_quantiles=exact_quantiles).cache()
     return train_and_score(
         featurized,
-        doc_col="ip_dst",
-        word_col="word",
+        [("ip_dst", "word", "score")],
         topic_count=topic_count,
         doc_concentration=doc_concentration,
         threshold=threshold,

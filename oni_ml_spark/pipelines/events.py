@@ -14,27 +14,24 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from oni_ml_spark.pipelines.common import SuspiciousConnectsResult, train_and_score
-from oni_ml_spark.transforms import DECILES, QUINTILES, bin_expr
+from oni_ml_spark.transforms import (
+    DECILES,
+    QUINTILES,
+    approx_quantile_cuts_multi,
+    bin_expr,
+    quantile_cuts_multi,
+)
 
 
 def featurize(df: DataFrame, exact_quantiles: bool = True) -> DataFrame:
-    from oni_ml_spark.transforms.quantiles import (
-        approx_quantile_cuts_multi,
-        quantile_cuts_multi,
-    )
-
     df = df.withColumn("hour", F.hour("ts").cast("double")).cache()
-    if exact_quantiles:
-        cuts = quantile_cuts_multi(df, {"value": DECILES, "hour": QUINTILES})
-        value_cuts, hour_cuts = cuts["value"], cuts["hour"]
-    else:
-        # both sketches in one action; hour quintiles = every 2nd decile
-        cuts = approx_quantile_cuts_multi(df, ["value", "hour"], DECILES)
-        value_cuts, hour_cuts = cuts["value"], cuts["hour"][1::2]
+    cuts = (quantile_cuts_multi if exact_quantiles else approx_quantile_cuts_multi)(
+        df, {"value": DECILES, "hour": QUINTILES}
+    )
     df = df.withColumns(
         {
-            "value_bin": bin_expr("value", value_cuts),
-            "hour_bin": bin_expr("hour", hour_cuts),
+            "value_bin": bin_expr("value", cuts["value"]),
+            "hour_bin": bin_expr("hour", cuts["hour"]),
         }
     )
     return df.withColumn(
@@ -62,8 +59,7 @@ def run(
     featurized = featurize(df, exact_quantiles=exact_quantiles).cache()
     return train_and_score(
         featurized.withColumn("doc_id", F.col("user_id").cast("string")),
-        doc_col="doc_id",
-        word_col="word",
+        [("doc_id", "word", "score")],
         topic_count=topic_count,
         threshold=threshold,
         top_k=top_k,

@@ -13,21 +13,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from oni_ml_spark.pipelines.common import (
-    FEEDBACK_FLAG,
     SuspiciousConnectsResult,
     train_and_score,
+    with_feedback,
 )
-from oni_ml_spark.scoring import min_endpoint_score, most_suspicious, score_records
-from oni_ml_spark.topics import fit_topic_model
+# perfbench/job.py patches these two names when tracing a run
+from oni_ml_spark.scoring import score_records  # noqa: F401
+from oni_ml_spark.topics import fit_topic_model  # noqa: F401
 from oni_ml_spark.transforms import (
     DECILES,
     QUINTILES,
+    approx_quantile_cuts_multi,
     bin_expr,
     flow_word_cols,
     fractional_hour,
-    oversample,
+    quantile_cuts_multi,
 )
-from oni_ml_spark.transforms.feedback import conform_feedback, severity_filter
 
 
 def valid_time_filter(df: DataFrame) -> DataFrame:
@@ -42,28 +43,16 @@ def valid_time_filter(df: DataFrame) -> DataFrame:
 def featurize(df: DataFrame, exact_quantiles: bool = True) -> DataFrame:
     """num_time + three quantile-cut bins + flow words, single pass.
 
-    The three cut computations are Spark actions that each return a ≤10-double
-    array to the driver — the only driver-boundary crossings in the pipeline
-    (reference had the same, netflow/FlowWordCreation.scala:26-49).
+    The cut computation returns ≤10 doubles per column to the driver — the
+    only driver-boundary crossing in featurization (reference had the same,
+    netflow/FlowWordCreation.scala:26-49).
     """
-    from oni_ml_spark.transforms.quantiles import (
-        approx_quantile_cuts_multi,
-        quantile_cuts_multi,
-    )
-
     df = df.withColumn("num_time", fractional_hour("trhour", "trminute", "trsec"))
     df = df.cache()
-    if exact_quantiles:
-        # all three cut sets in 3 jobs total (vs 3 per column)
-        cuts = quantile_cuts_multi(
-            df, {"num_time": DECILES, "ibyt": DECILES, "ipkt": QUINTILES}
-        )
-        time_cuts, ibyt_cuts, ipkt_cuts = cuts["num_time"], cuts["ibyt"], cuts["ipkt"]
-    else:
-        # one sketch pass for all three columns; quintiles = every 2nd decile
-        cuts = approx_quantile_cuts_multi(df, ["num_time", "ibyt", "ipkt"], DECILES)
-        time_cuts, ibyt_cuts = cuts["num_time"], cuts["ibyt"]
-        ipkt_cuts = cuts["ipkt"][1::2]
+    cuts = (quantile_cuts_multi if exact_quantiles else approx_quantile_cuts_multi)(
+        df, {"num_time": DECILES, "ibyt": DECILES, "ipkt": QUINTILES}
+    )
+    time_cuts, ibyt_cuts, ipkt_cuts = cuts["num_time"], cuts["ibyt"], cuts["ipkt"]
 
     df = df.withColumns(
         {
@@ -91,46 +80,19 @@ def run(
     exact_quantiles: bool = True,
     max_count_per_word: int | None = 10_000,
 ) -> SuspiciousConnectsResult:
-    df = valid_time_filter(df).withColumn(FEEDBACK_FLAG, F.lit(False))
-    if feedback is not None:
-        fb = oversample(severity_filter(feedback), dup_factor).withColumn(
-            FEEDBACK_FLAG, F.lit(True)
-        )
-        df = df.unionByName(conform_feedback(fb, df))
-
+    df = with_feedback(valid_time_filter(df), feedback, "sev", dup_factor)
     featurized = featurize(df, exact_quantiles=exact_quantiles).cache()
-
-    # Corpus: each IP's document collects words from both endpoints
-    # (netflow/FlowPreLDA.scala:131-139). One explode + one groupBy — a
-    # single shuffle over 2N rows, instead of the reference's two
-    # reduceByKeys + union (three shuffles).
-    counts = (
-        featurized.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("sip").alias("doc"), F.col("source_word").alias("word")),
-                    F.struct(F.col("dip").alias("doc"), F.col("destination_word").alias("word")),
-                )
-            ).alias("dw")
-        )
-        .select("dw.doc", "dw.word")
-        .groupBy("doc", "word")
-        .agg(F.count(F.lit(1)).alias("count"))
-    )
-    model = fit_topic_model(counts, topic_count=topic_count,
-                            doc_concentration=doc_concentration,
-                            seed=seed, max_iter=max_iter,
-                            max_count_per_word=max_count_per_word)
-
-    to_score = featurized.filter(~F.col(FEEDBACK_FLAG)).drop(FEEDBACK_FLAG)
     # Flow quirk preserved: inner join drops IPs unseen in training
     # (netflow/FlowPostLDA.scala:94, SURVEY.md §7.4.4).
-    scored = score_records(
-        to_score, model, "sip", "source_word", score_col="src_score", drop_unseen_docs=True
+    return train_and_score(
+        featurized,
+        [("sip", "source_word", "src_score"), ("dip", "destination_word", "dst_score")],
+        topic_count=topic_count,
+        doc_concentration=doc_concentration,
+        threshold=threshold,
+        top_k=top_k,
+        seed=seed,
+        max_iter=max_iter,
+        drop_unseen_docs=True,
+        max_count_per_word=max_count_per_word,
     )
-    scored = score_records(
-        scored, model, "dip", "destination_word", score_col="dst_score", drop_unseen_docs=True
-    )
-    scored = scored.withColumn("score", min_endpoint_score("src_score", "dst_score"))
-    suspicious = most_suspicious(scored, threshold=threshold, top_k=top_k)
-    return SuspiciousConnectsResult(scored, suspicious, model)

@@ -16,16 +16,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from oni_ml_spark.pipelines.common import FEEDBACK_FLAG, SuspiciousConnectsResult, train_and_score
+from oni_ml_spark.pipelines.common import (
+    SuspiciousConnectsResult,
+    train_and_score,
+    with_feedback,
+)
 from oni_ml_spark.transforms import (
     DECILES,
     QUINTILES,
+    approx_quantile_cuts_multi,
     bin_expr,
-    oversample,
-    string_entropy,
     proxy_word,
+    quantile_cuts_multi,
+    string_entropy,
 )
-from oni_ml_spark.transforms.feedback import conform_feedback, severity_filter
 from oni_ml_spark.transforms.time import seconds_of_day
 
 
@@ -44,36 +48,20 @@ def featurize(
     Reference cuts: time deciles (ProxySuspiciousConnectsModel.scala:106-107),
     fulluri-entropy quintiles (:109-110), agent-count quintiles (:112-118).
     """
-    from oni_ml_spark.transforms.quantiles import (
-        approx_quantile_cuts_multi,
-        quantile_cuts_multi,
-    )
-
     df = df.withColumn("num_time", seconds_of_day("p_time"))
     df = df.withColumn("uri_entropy", string_entropy("fulluri"))
 
     agent_counts = df.groupBy("useragent").agg(F.count(F.lit(1)).alias("agent_count"))
     df = df.join(F.broadcast(agent_counts), "useragent", "left").cache()
 
-    if exact_quantiles:
-        cuts = quantile_cuts_multi(
-            df,
-            {"num_time": DECILES, "uri_entropy": QUINTILES, "agent_count": QUINTILES},
-        )
-        time_cuts = cuts["num_time"]
-        entropy_cuts, agent_cuts = cuts["uri_entropy"], cuts["agent_count"]
-    else:
-        cuts = approx_quantile_cuts_multi(
-            df, ["num_time", "uri_entropy", "agent_count"], DECILES
-        )
-        time_cuts = cuts["num_time"]
-        entropy_cuts = cuts["uri_entropy"][1::2]
-        agent_cuts = cuts["agent_count"][1::2]
+    cuts = (quantile_cuts_multi if exact_quantiles else approx_quantile_cuts_multi)(
+        df, {"num_time": DECILES, "uri_entropy": QUINTILES, "agent_count": QUINTILES}
+    )
 
     df = df.withColumns(
         {
-            "uri_entropy_bin": bin_expr("uri_entropy", entropy_cuts),
-            "agent_count_bin": bin_expr("agent_count", agent_cuts),
+            "uri_entropy_bin": bin_expr("uri_entropy", cuts["uri_entropy"]),
+            "agent_count_bin": bin_expr("agent_count", cuts["agent_count"]),
         }
     )
     return df.withColumn(
@@ -81,7 +69,7 @@ def featurize(
         proxy_word(
             "host", "p_time", "reqmethod", "uri_entropy_bin", "resconttype",
             "agent_count_bin", "respcode",
-            time_cuts=time_cuts, top_domains=top_domains,
+            time_cuts=cuts["num_time"], top_domains=top_domains,
         ),
     )
 
@@ -101,18 +89,11 @@ def run(
     max_count_per_word: int | None = 10_000,
     exact_quantiles: bool = True,
 ) -> SuspiciousConnectsResult:
-    df = null_filter(df).withColumn(FEEDBACK_FLAG, F.lit(False))
-    if feedback is not None:
-        fb = oversample(severity_filter(feedback, "uri_sev"), dup_factor).withColumn(
-            FEEDBACK_FLAG, F.lit(True)
-        )
-        df = df.unionByName(conform_feedback(fb, df))
-
+    df = with_feedback(null_filter(df), feedback, "uri_sev", dup_factor)
     featurized = featurize(df, top_domains or [], exact_quantiles=exact_quantiles).cache()
     return train_and_score(
         featurized,
-        doc_col="clientip",
-        word_col="word",
+        [("clientip", "word", "score")],
         topic_count=topic_count,
         doc_concentration=doc_concentration,
         threshold=threshold,

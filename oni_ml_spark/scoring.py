@@ -110,12 +110,10 @@ def score_records(
     return out
 
 
-def min_endpoint_score(src_score: Column | str, dst_score: Column | str) -> Column:
+def min_endpoint_score(*scores: Column | str) -> Column:
     """Flow records are scored from both endpoints; the record's score is the
     minimum (netflow/FlowPostLDA.scala:115-126) — F.least, not a UDF."""
-    s = F.col(src_score) if isinstance(src_score, str) else src_score
-    d = F.col(dst_score) if isinstance(dst_score, str) else dst_score
-    return F.least(s, d)
+    return F.least(*scores)
 
 
 def most_suspicious(

@@ -1,9 +1,9 @@
 """Streaming scoring and windowed corpus aggregation.
 
 - ``score_stream``: attach anomaly scores to a streaming DataFrame using a
-  batch-trained TopicModel. Stream-static broadcast joins + the same native
-  dot product as batch scoring — the logical plan is identical to the batch
-  path, so batch/stream parity holds by construction.
+  batch-trained TopicModel. It is the batch ``score_records`` over a
+  stream (stream-static broadcast joins + the native dot product), so
+  batch/stream parity holds by construction.
 - ``windowed_corpus_counts``: watermarked sliding-window (doc, word) counts —
   the streaming input for periodic model refits; late events beyond the
   watermark are dropped deterministically.
@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from oni_ml_spark.scoring import dot, uniform_mix
+from oni_ml_spark.scoring import score_records
 from oni_ml_spark.topics import TopicModel
 
 
@@ -27,22 +27,7 @@ def score_stream(
 ) -> DataFrame:
     """Stream-static join scoring (left joins keep unseen docs/words with the
     uniform 1/k fallback, matching batch dns/proxy semantics)."""
-    k = model.topic_count
-    mix = model.doc_topic_mix.withColumnRenamed("doc", "__doc")
-    wp = model.word_probs.withColumnRenamed("word", "__word")
-    return (
-        stream.join(F.broadcast(mix), stream[doc_col] == mix["__doc"], "left")
-        .join(F.broadcast(wp), stream[word_col] == wp["__word"], "left")
-        .withColumn(
-            score_col,
-            dot(
-                F.coalesce(F.col("topic_mix"), uniform_mix(k)),
-                F.coalesce(F.col("word_given_topic"), uniform_mix(k)),
-                k=k,
-            ),
-        )
-        .drop("__doc", "__word", "topic_mix", "word_given_topic")
-    )
+    return score_records(stream, model, doc_col, word_col, score_col=score_col)
 
 
 def windowed_corpus_counts(

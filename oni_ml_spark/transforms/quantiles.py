@@ -645,29 +645,34 @@ def approx_quantile_cuts(
 
 def approx_quantile_cuts_multi(
     df: DataFrame,
-    cols: list[str],
-    probs: list[float],
-    rel_err: float = 0.001,
+    probs_by_col: dict[str, list[float]],
     positive_only: set[str] | frozenset[str] = frozenset(),
+    rel_err: float = 0.001,
 ) -> dict[str, list[float]]:
     """One-pass approximate quantiles for SEVERAL columns — one Spark action
     total, vs one per column (the reference ran five separate full-scan
     quantile jobs per featurization, dns/DNSWordCreation.scala:78-122).
+    Same contract as ``quantile_cuts_multi``; each column's cuts equal
+    ``approx_quantile_cuts`` over that column alone.
 
-    ``positive_only`` columns apply the reference's >0 predicate (P5) by
-    masking non-positive values to null INSIDE the one pass — approxQuantile
-    ignores nulls, so a per-column pre-filter job is never needed."""
+    The sketch pass answers the union of every column's probs; a column
+    reads its own probs from it. ``positive_only`` columns apply the
+    reference's >0 predicate (P5) by masking non-positive values to null
+    INSIDE the one pass — approxQuantile ignores nulls, so a per-column
+    pre-filter job is never needed; an all-masked column yields +inf."""
+    cols = list(probs_by_col)
+    probs = sorted({min(float(p), 1.0) for ps in probs_by_col.values() for p in ps})
 
     def _val(c: str):
         v = F.col(c).cast("double")
         return (F.when(v > 0, v) if c in positive_only else v).alias(c)
 
-    casted = df.select(*[_val(c) for c in cols])
-    got = casted.approxQuantile(cols, [min(p, 1.0) for p in probs], rel_err)
-    return {
-        c: (vals if vals else [float("inf")] * len(probs))
-        for c, vals in zip(cols, got)
-    }
+    got = df.select(*[_val(c) for c in cols]).approxQuantile(cols, probs, rel_err)
+    out = {}
+    for c, vals in zip(cols, got):
+        by_p = dict(zip(probs, vals or [float("inf")] * len(probs)))
+        out[c] = [by_p[min(float(p), 1.0)] for p in probs_by_col[c]]
+    return out
 
 
 def bin_expr(value: Column | str, cuts: list[float]) -> Column:

@@ -13,6 +13,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from oni_ml_spark.pipelines import common
 from oni_ml_spark.pipelines import dns as dns_pipe
 from oni_ml_spark.pipelines import events as events_pipe
 from oni_ml_spark.pipelines import flow as flow_pipe
@@ -98,6 +99,11 @@ class TestFlowPipeline:
     def test_suspicious_sorted_ascending(self, result):
         scores = [r["score"] for r in result.suspicious.select("score").collect()]
         assert scores == sorted(scores)
+
+    def test_both_endpoints_reach_the_corpus(self, spark, result):
+        fx = _flow_fixture(spark)
+        ips = fx.select(F.col("sip").alias("ip")).union(fx.select(F.col("dip").alias("ip")))
+        assert result.model.n_docs == ips.distinct().count()
 
 
 def _dns_fixture(spark, n_common=1500, n_rare=5):
@@ -250,6 +256,50 @@ class TestFeedbackLoop:
             .agg(F.avg("score")).collect()[0][0]
         )
         assert rare_score_after > rare_score_before
+
+
+def _feedback_case(spark, source):
+    """(pipeline, day, sev column, predicate of the day's rare rows, run
+    kwargs) for one source."""
+    if source == "flow":
+        day = _flow_fixture(spark, n_common=800, n_rare=5)
+        return flow_pipe, day, "sev", F.col("dport") == 6667, {}
+    kw = {"top_domains": ["amazon", "google"]}
+    if source == "dns":
+        day = _dns_fixture(spark, n_common=800)
+        return dns_pipe, day, "dns_sev", F.col("ip_src") == "6.6.6.6", kw
+    day = _proxy_fixture(spark, n_common=800)
+    return proxy_pipe, day, "uri_sev", F.col("host").contains("evil"), kw
+
+
+@pytest.mark.parametrize("source", ["flow", "dns", "proxy"])
+def test_feedback_rows_are_never_scored(spark, source):
+    """Severity-3 feedback trains the model but is never scored: the scored
+    record count is the same with and without it, and the feedback union
+    carries exactly dup_factor copies of each severity-3 row and nothing
+    else."""
+    pipe, day, sev_col, is_rare, kw = _feedback_case(spark, source)
+    dup = 7
+    rare = day.filter(is_rare)
+    fb = rare.withColumn(sev_col, F.lit("3")).unionByName(
+        day.filter(~is_rare).limit(3).withColumn(sev_col, F.lit("1"))
+    )
+
+    union = common.with_feedback(day, fb, sev_col, dup)
+    got = (
+        union.filter(F.col(common.FEEDBACK_FLAG)).drop(common.FEEDBACK_FLAG)
+        .groupBy(*day.columns).count().collect()
+    )
+    want = rare.groupBy(*day.columns).count().collect()
+    assert len(want) > 0
+    assert sorted(tuple(r) for r in got) == sorted(
+        (*tuple(r)[:-1], r["count"] * dup) for r in want
+    )
+
+    run = dict(topic_count=3, max_iter=2, seed=42, **kw)
+    without = pipe.run(day, **run).scored.count()
+    with_fb = pipe.run(day, fb, dup_factor=dup, **run).scored.count()
+    assert with_fb == without > 0
 
 
 class TestEventsPipeline:

@@ -68,35 +68,65 @@ def test_bin_expr_matches_python_oracle(spark, values, raw_cuts):
     assert got == want, (values, cuts)
 
 
-def test_quantile_cuts_multi_matches_per_column(spark):
-    """The 3-jobs-total multi-column exact path must produce IDENTICAL cuts
-    to the per-column exact path, including the positive-only (P5) filter
-    and the empty-input +inf edge."""
-    from pyspark.sql import functions as F
-
+def _check_multi_matches_per_column(spark, multi_fn, single_fn):
+    """``multi_fn`` (a ``*_quantile_cuts_multi``) against ``single_fn`` per
+    column, the positive-only (P5) filter, quintiles as every second decile,
+    and the +inf edges (empty input, all-non-positive positive-only column)."""
     from oni_ml_spark.io import load_table
-    from oni_ml_spark.transforms.quantiles import quantile_cuts_multi
 
     li = load_table(spark, "/root/testdata/sf0.001", "lineitem")
-    multi = quantile_cuts_multi(
+    multi = multi_fn(
         li, {"l_quantity": DECILES, "l_extendedprice": DECILES, "l_discount": QUINTILES}
     )
     for c, probs in [
         ("l_quantity", DECILES), ("l_extendedprice", DECILES), ("l_discount", QUINTILES)
     ]:
-        assert multi[c] == quantile_cuts(li, c, probs), c
+        assert multi[c] == single_fn(li, c, probs), c
 
     e = load_table(spark, "/root/testdata/sf0.001", "events").withColumn(
         "hour", F.hour("ts").cast("double")
     )
-    m2 = quantile_cuts_multi(
+    m2 = multi_fn(
         e, {"value": DECILES, "hour": QUINTILES}, positive_only={"value"}
     )
-    assert m2["value"] == quantile_cuts(e.filter(F.col("value") > 0), "value", DECILES)
-    assert m2["hour"] == quantile_cuts(e, "hour", QUINTILES)
+    assert m2["value"] == single_fn(e.filter(F.col("value") > 0), "value", DECILES)
+    assert m2["hour"] == single_fn(e, "hour", QUINTILES)
 
-    m3 = quantile_cuts_multi(e.filter(F.lit(False)), {"value": QUINTILES})
+    both = e.withColumn("hour_q", F.col("hour"))
+    m4 = multi_fn(both, {"hour": DECILES, "hour_q": QUINTILES})
+    assert m4["hour_q"] == m4["hour"][1::2]
+
+    m5 = multi_fn(
+        e.withColumn("neg", -F.abs(F.col("value"))),
+        {"neg": DECILES, "hour": QUINTILES}, positive_only={"neg"},
+    )
+    assert m5["neg"] == [float("inf")] * len(DECILES)
+    assert m5["hour"] == m2["hour"]
+
+    m3 = multi_fn(e.filter(F.lit(False)), {"value": QUINTILES})
     assert all(x == float("inf") for x in m3["value"])
+
+
+def test_quantile_cuts_multi_matches_per_column(spark):
+    """The 3-jobs-total multi-column exact path must produce IDENTICAL cuts
+    to the per-column exact path, including the positive-only (P5) filter
+    and the empty-input +inf edge."""
+    from oni_ml_spark.transforms.quantiles import quantile_cuts_multi
+
+    _check_multi_matches_per_column(spark, quantile_cuts_multi, quantile_cuts)
+
+
+def test_approx_quantile_cuts_multi_matches_per_column(spark):
+    """The one-pass sketch path honours the same contract as the exact
+    multi-column path: each column equals single-column
+    ``approx_quantile_cuts``, quintile columns read every second decile of
+    the shared pass, and masked-out or empty columns yield +inf."""
+    from oni_ml_spark.transforms.quantiles import (
+        approx_quantile_cuts,
+        approx_quantile_cuts_multi,
+    )
+
+    _check_multi_matches_per_column(spark, approx_quantile_cuts_multi, approx_quantile_cuts)
 
 
 def test_prob_zero_means_minimum(spark):
